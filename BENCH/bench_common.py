@@ -1,10 +1,10 @@
 """Shared steady-state session warmup for bench.py and the isolated
-re-measure harness.
+re-measure tool (BENCH/bench_extra.py).
 
 The mover-settlement rule's validity rests on "same session shape +
 warmups as bench.py"; keeping the warmup sequence in ONE place makes
 that comparability structural instead of a copy that can drift (it
-drifted once: the first remeasure_query.py omitted the head-of-line
+drifted once: an earlier re-measure tool omitted the head-of-line
 warmup, inflating rep 0 by the documented 0.3-0.7s session residual).
 
 Each block is untimed and mirrors what a long-running production job
@@ -27,17 +27,14 @@ def noop_materialize(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def warm_session(spark, sf_dir, *, registry_head=2, exclude=()):
+def warm_session(spark, sf_dir, *, registry_head=2):
     """Run bench.py's full untimed warmup sequence on ``spark``.
 
     ``registry_head`` warm-runs the first N registry entries (skipping
-    MEMO_CONSUMERS and ``exclude``) so the ~0.3-0.7s first-query
-    session residual (codegen compiles, broadcast-exchange thread
-    init, python worker pool growth — measured in round 4) does not
-    land on the first measured query.  Pass the queries about to be
-    MEASURED via ``exclude`` so a head entry that is itself under
-    measurement is not pre-warmed into an unrepresentative plan-warm
-    reading."""
+    MEMO_CONSUMERS) so the ~0.3-0.7s first-query session residual
+    (codegen compiles, broadcast-exchange thread init, python worker
+    pool growth — measured in round 4) does not land on the first
+    measured query."""
     from htmpark.corpus import synthesize_pages
     from htmpark.job import extract_pages
     from htmpark.queries import REGISTRY
@@ -63,7 +60,6 @@ def warm_session(spark, sf_dir, *, registry_head=2, exclude=()):
                                  "ORDER BY id) AS rn")
                      .groupBy("x").count())
     # head-of-line residual leveller
-    skip = MEMO_CONSUMERS | set(exclude)
     for name in list(REGISTRY)[:registry_head]:
-        if name not in skip:
+        if name not in MEMO_CONSUMERS:
             noop_materialize(REGISTRY[name][0](spark, sf_dir))

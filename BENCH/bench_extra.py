@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
-"""Round-12 optimization harness: isolated per-query timing + plan capture.
+"""Isolated steady-state re-measure of registry queries + plan capture.
 
-NOT the driver bench (bench.py is frozen for measurement) — this is the
-guide §1 instrumentation: each named query is timed through the noop sink
-in a warmed session (same warmup sequence as bench.py via
-BENCH.bench_common.warm_session), with `.explain("formatted")` optionally
-written to plans/r12/<query>_<tag>.txt so plan claims in
-OPTIMIZATION_r12.md are checkable without running Spark.
+NOT the driver bench (bench.py is frozen for measurement).  A suspected
+per-query mover in a full bench run is settled by this tool: each named
+query is timed through the noop sink in a session shaped like bench.py's
+(local[cpus], shuffle partitions max(cpus, 32)) after the same warmup
+(BENCH.bench_common.warm_session — measured queries are NOT excluded:
+bench.py warm-runs the registry-head entries before timing them, so a
+head entry's comparable reading is plan-warm) and after the dedup-family
+memos are built untimed, as bench.py times them on their own lines.
+Each rep is comparable to one bench.py reading.  `.explain("formatted")`
+is optionally written to <plans>/<query>_<tag>.txt so plan claims are
+checkable without running Spark.
 
 Usage:
   python BENCH/bench_extra.py --sf /root/testdata/sf1.0 --reps 3 \
@@ -34,9 +39,6 @@ def main():
                     help="directory to write <query>_<tag>.txt explain files")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--list", action="store_true")
-    ap.add_argument("--memo", action="store_true",
-                    help="pre-build the dedup family memos untimed (so a "
-                         "family consumer is timed plan-only, as in bench.py)")
     args = ap.parse_args()
 
     from htmpark.queries import REGISTRY
@@ -54,11 +56,9 @@ def main():
                           shuffle_partitions=max(args.cpus, 32),
                           app_name="htmpark-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_session(spark, args.sf, exclude=args.queries)
-
-    if args.memo:
-        candidate_pairs(spark, args.sf)
-        noop_materialize(q_dedup_clusters(spark, args.sf))
+    warm_session(spark, args.sf)
+    candidate_pairs(spark, args.sf)
+    noop_materialize(q_dedup_clusters(spark, args.sf))
 
     out = {}
     for name in args.queries:

@@ -6,7 +6,7 @@ payloads).  This suite synthesizes a SEEDED random mini-sf directory with
 edge cases the fixed tables lack — single-word documents, unicode words,
 malformed/missing JSON payloads, heavily duplicated texts — and re-runs a
 broad query subset through the same row-count/schema/value-hash compare
-as tools/check_oracle.py.
+(tools/check_oracle.compare) as the fixed-table gate.
 
 Determinism guards: (user_id, ts) pairs are globally unique (gap/session/
 as-of orderings would otherwise be tie-ambiguous between engines, which is
@@ -22,9 +22,9 @@ import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))) + "/tools")
-from check_oracle import frame_hash  # noqa: E402
+from check_oracle import compare, duck_views  # noqa: E402
 
-from htmpark.queries import REGISTRY, resolve_sql  # noqa: E402
+from htmpark.queries import REGISTRY  # noqa: E402
 
 VOCAB = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
          "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi "
@@ -183,24 +183,10 @@ def rnd_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def rnd_duck(rnd_sf):
-    con = duckdb.connect()
-    for t in ("events", "documents", "embeddings", "orders", "lineitem",
-              "customer", "part", "supplier", "nation", "region"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{rnd_sf}/{t}.parquet')")
-    return con
+    return duck_views(rnd_sf)
 
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_random_differential(spark, rnd_sf, rnd_duck, name):
-    fn, sql = REGISTRY[name]
-    sql = resolve_sql(sql, rnd_sf)
-    stab = fn(spark, rnd_sf).toArrow()
-    scols = stab.column_names
-    srows = [tuple(r[c] for c in scols) for r in stab.to_pylist()]
-    dtab = rnd_duck.execute(sql).arrow()
-    dcols = dtab.column_names
-    drows = [tuple(r[c] for c in dcols) for r in dtab.to_pylist()]
-    assert sorted(scols) == sorted(dcols)
-    assert len(srows) == len(drows), f"{name}: {len(srows)} vs {len(drows)}"
-    assert frame_hash(scols, srows) == frame_hash(dcols, drows), name
+    _, problems = compare(spark, rnd_duck, name, rnd_sf)
+    assert not problems, f"{name}: {problems}"

@@ -1,17 +1,21 @@
-"""Driver-contract queries: registry shape + spot semantic checks + the
-DuckDB oracle gate at sf0.001 (the full gate runs via tools/check_oracle.py
-and the driver at sf0.01)."""
+"""Driver-contract queries: registry shape, spot semantic checks, and the
+DuckDB oracle gate for every registry entry at sf0.001 and sf0.01."""
 import os
+import sys
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from htmpark.queries import REGISTRY, resolve_sql
+from htmpark.queries import REGISTRY
+
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check_oracle import compare, duck_views  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+ORACLE_SCALES = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 def test_contract_shape():
@@ -21,44 +25,19 @@ def test_contract_shape():
     assert set(osql) <= set(qs)
 
 
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-    return con
+@pytest.fixture(scope="module", params=ORACLE_SCALES, ids=os.path.basename)
+def oracle_scale(request):
+    return request.param, duck_views(request.param)
 
 
-# cheap, JVM-only queries get the full oracle comparison in pytest;
-# the mapInPandas ones are covered by tools/check_oracle.py (slower)
-FAST = [
-    "rel_pricing_summary", "rel_top_revenue_nations", "rel_window_latest_orders",
-    "rel_customers_without_orders", "rel_topk_expensive_parts",
-    "rel_event_sessions", "dedup_exact", "text_quality", "text_token_count",
-    "text_fingerprint", "text_top_terms", "sim_topk_bruteforce",
-    "rel_events_json", "text_repetition", "dedup_substring",
-]
-
-
-@pytest.mark.parametrize("name", FAST)
-def test_fast_query_matches_oracle(spark, duck, name):
-    # Arrow fetch on both sides: the driver's hash is type-sensitive, and
-    # fetchall() collapses DuckDB HUGEINT to int (round-1 masking bug)
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))) + "/tools")
-    from check_oracle import frame_hash
-
-    fn, sql = REGISTRY[name]
-    sql = resolve_sql(sql, SF)
-    stab = fn(spark, SF).toArrow()
-    scols = stab.column_names
-    srows = [tuple(d[c] for c in scols) for d in stab.to_pylist()]
-    dtab = duck.execute(sql).arrow()
-    dcols = dtab.column_names
-    drows = [tuple(d[c] for c in dcols) for d in dtab.to_pylist()]
-    assert sorted(scols) == sorted(dcols)
-    assert len(srows) == len(drows)
-    assert frame_hash(scols, srows) == frame_hash(dcols, drows)
+@pytest.mark.parametrize("name", list(REGISTRY))
+def test_query_matches_oracle(spark, oracle_scale, name):
+    """The correctness gate: every registry query, at both scales, has
+    scalar output columns only and equals its DuckDB oracle in schema,
+    row count and type-faithful value hash (tools/check_oracle.compare)."""
+    sf_dir, con = oracle_scale
+    _, problems = compare(spark, con, name, sf_dir)
+    assert not problems, problems
 
 
 def test_entry_returns_rows(spark):
@@ -240,6 +219,8 @@ def test_probe_rows_upper_bound(tmp_path):
         sum(1 for i in range(500) if i % 97 == 0)
     assert _probe_rows_upper_bound(SF, "embeddings", "vec_id", 100) == \
         sum(1 for i in range(500) if i % 100 == 0)
+    assert _probe_rows_upper_bound(SF, "embeddings", "vec_id", 50, 7) == \
+        sum(1 for i in range(500) if i % 50 == 7)
 
     # sparse id space: EVERY id a multiple of 100 -> all 50 rows are
     # probes; the old dense estimate said 50 // 100 = 0 (broadcast),
@@ -1291,212 +1272,6 @@ def test_cc_star_variant_matches_label_prop(spark):
         assert got == {(v, find(v)) for v in verts}
 
 
-def test_registry_outputs_are_scalar(spark):
-    """Driver-contract invariant: NO queries() output column may be an
-    array/map/struct.  The binding correctness driver canonicalizes via a
-    pandas sort_values across all columns, which raises "unhashable type"
-    on list/dict cells BEFORE comparing anything — the second
-    hash-representation trap it has sprung (r1: HUGEINT vs int64; r4:
-    text_inverted_index's array postings shipped driver-red despite being
-    oracle-exact).  Complex values must be serialized to strings
-    (concat_ws / array_to_string) on both engines."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad = []
-    for name, (fn, _sql) in REGISTRY.items():
-        for field in fn(spark, SF).schema.fields:
-            if isinstance(field.dataType, (ArrayType, MapType, StructType)):
-                bad.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert not bad, f"non-scalar driver output columns: {bad}"
-
-
-def test_registry_order_is_safe():
-    """The driver verifies only the first 50 registry entries; entries past
-    that window must be >=3x driver-green, green in the LATEST recorded
-    round, and byte-untouched since their fingerprints were recorded (r4
-    ADVICE: the order was a load-bearing manual invariant with no
-    enforcement).  tools/check_registry_order.py recomputes all three
-    from CORRECTNESS_r*.json + source fingerprints.
-
-    Exit 2 = ROTATION PENDING: the driver dropped a new CORRECTNESS
-    file after the last builder commit (untracked in git) and the tree
-    is fully safe as of the previous one — the known round-boundary
-    state, reported as a loud SKIP whose message is the round-opening
-    instruction rather than a spurious red.  Committing that file
-    without re-recording the manifest flips it to a REAL exit-1
-    failure (the r10 ADVICE hazard)."""
-    import subprocess
-    import sys as _sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    res = subprocess.run(
-        [_sys.executable, os.path.join(root, "tools", "check_registry_order.py")],
-        capture_output=True, text=True)
-    if res.returncode == 2:
-        pytest.skip("rotation pending (driver drop postdates last "
-                    "builder commit): " + res.stdout.strip())
-    assert res.returncode == 0, res.stdout + res.stderr
-
-
-def test_registry_order_pending_vs_unsafe(tmp_path):
-    """The ROTATION-PENDING classifier's two ingredients, pinned in
-    isolation: (a) evaluate() judges the same tree safe as-of the
-    vouched driver file and unsafe as-of a newer one the manifest has
-    not seen (the exact judging-time delta); (b) _untracked()
-    distinguishes a driver drop (untracked file -> True) from a
-    committed artifact (tracked -> False), and fails CLOSED (False)
-    outside a git repo so the strict exit-1 path wins."""
-    import importlib.util
-    import json
-    import subprocess
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "cro", os.path.join(root, "tools", "check_registry_order.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-
-    # one window entry + one tail entry, tail 3x green, vouched by a
-    # gate-scale manifest recorded against r09
-    registry = {f"q{i}": None for i in range(m.WINDOW)}
-    registry["tailq"] = None
-    current = {name: "fp" for name in registry}
-    hist = {name: [(f"CORRECTNESS_r0{k}.json", True) for k in (7, 8, 9)]
-            for name in registry}
-    replica = {"latest_driver": "CORRECTNESS_r09.json", "sf": "sf0.01",
-               "queries": {"tailq": "fp"}}
-    stored = dict(current)
-
-    safe, _, _ = m.evaluate(registry, current, hist,
-                            "CORRECTNESS_r09.json", stored, replica)
-    assert not safe
-    stale, _, _ = m.evaluate(registry, current, hist,
-                             "CORRECTNESS_r10.json", stored, replica)
-    assert any("not green in CORRECTNESS_r10.json" in p for p in stale)
-
-    repo = tmp_path / "r"
-    repo.mkdir()
-    subprocess.run(["git", "init", "-q", str(repo)], check=True)
-    (repo / "tracked.json").write_text("{}")
-    (repo / "dropped.json").write_text("{}")
-    subprocess.run(["git", "-C", str(repo), "add", "tracked.json"],
-                   check=True)
-    assert m._untracked(str(repo), "dropped.json") is True
-    assert m._untracked(str(repo), "tracked.json") is False
-    assert m._untracked(str(tmp_path), "dropped.json") is False
-    # a gitignored artifact would make pending a PERMANENT skip (the
-    # untracked -> tracked transition can never fire) -> stay strict
-    (repo / ".gitignore").write_text("dropped.json\n")
-    assert m._untracked(str(repo), "dropped.json") is False
-
-    # a red row in the dropped file blocks the pending downgrade: the
-    # next session must SEE the gate failure, not skip past it
-    green = {"rows_match": True, "schema_match": True,
-             "hash_match": True, "err": None}
-    red_err = dict(green, err="boom")
-    red_hash = dict(green, hash_match=False)
-    f = tmp_path / "c.json"
-    f.write_text(json.dumps({"a": green, "b": green}))
-    assert m.all_rows_green(str(f)) is True
-    f.write_text(json.dumps({"a": green, "b": red_err}))
-    assert m.all_rows_green(str(f)) is False
-    f.write_text(json.dumps({"a": red_hash}))
-    assert m.all_rows_green(str(f)) is False
-    f.write_text("{}")  # empty: no evidence -> strict
-    assert m.all_rows_green(str(f)) is False
-    f.write_text("not json")
-    assert m.all_rows_green(str(f)) is False
-    assert m.all_rows_green(str(tmp_path / "missing.json")) is False
-
-    # the as-of-prev re-judgment must EXCLUDE the untracked file's
-    # rows: 2 committed greens + 1 green in the dropped file is NOT a
-    # mature tail entry as of the last commit
-    hist2 = {name: [(f"CORRECTNESS_r0{k}.json", True) for k in (7, 8, 9)]
-             for name in registry}
-    hist2["tailq"] = [("CORRECTNESS_r08.json", True),
-                      ("CORRECTNESS_r09.json", True),
-                      ("CORRECTNESS_r10.json", True)]  # r10 = the drop
-    hist_prev = {name: [(fl, ok) for fl, ok in rounds
-                        if fl != "CORRECTNESS_r10.json"]
-                 for name, rounds in hist2.items()}
-    inflated, _, _ = m.evaluate(registry, current, hist2,
-                                "CORRECTNESS_r09.json", stored, replica)
-    honest, _, _ = m.evaluate(registry, current, hist_prev,
-                              "CORRECTNESS_r09.json", stored, replica)
-    assert not inflated  # the unfiltered history would grant pending
-    assert any("only 2 driver-green rounds" in p for p in honest)
-
-
-def test_replica_manifest_requires_gate_scale():
-    """A replica manifest recorded at sf0.001 (check_oracle's default
-    scale) must NOT vouch for tail entries — only gate-scale (sf0.01+)
-    runs carry driver-equivalent evidence (r8 review: a bare
-    check_oracle.py run would otherwise overwrite the manifest and
-    green the tail on the weakest scale)."""
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "cro", os.path.join(root, "tools", "check_registry_order.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    rep = {"latest_driver": "CORRECTNESS_r07.json", "sf": "sf0.001",
-           "queries": {"q": "fp"}}
-    assert not m.replica_fresh(rep, "CORRECTNESS_r07.json", "q", "fp")
-    # at-gate AND above-gate scales vouch (numeric predicate, r9 review:
-    # exact tuple membership refused stronger-than-gate evidence)
-    for sf in ("sf0.01", "sf0.1", "sf1", "sf10"):
-        rep["sf"] = sf
-        assert m.replica_fresh(rep, "CORRECTNESS_r07.json", "q", "fp"), sf
-    for sf in ("sf0.001", "sf0.009", "", None, "garbage", "sf", "sfx"):
-        rep["sf"] = sf
-        assert not m.replica_fresh(rep, "CORRECTNESS_r07.json", "q", "fp"), sf
-
-
-def test_latest_correctness_sorts_numerically(tmp_path):
-    """Driver-round discovery must sort by NUMERIC round (r8 ADVICE):
-    lexicographic max mis-sorts r100 < r99 and breaks on padding drift
-    (r8 vs r08), silently matching replica freshness against the wrong
-    driver file."""
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "cro2", os.path.join(root, "tools", "check_registry_order.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    for r in ["r08", "r9", "r99", "r100"]:
-        (tmp_path / f"CORRECTNESS_{r}.json").write_text("{}")
-    assert m.latest_correctness(str(tmp_path)) == "CORRECTNESS_r100.json"
-    files = [os.path.basename(f) for f in m.correctness_files(str(tmp_path))]
-    assert files == ["CORRECTNESS_r08.json", "CORRECTNESS_r9.json",
-                     "CORRECTNESS_r99.json", "CORRECTNESS_r100.json"]
-
-
-def test_replica_manifest_not_recorded_below_gate_scale():
-    """check_oracle must never OVERWRITE a gate-scale replica manifest
-    with a sub-gate (sf0.001) one — the order checker would reject it and
-    the valid evidence would be silently lost (r8 ADVICE)."""
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "co_guard", os.path.join(root, "tools", "check_oracle.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    path = os.path.join(root, "tools", "replica_manifest.json")
-    before = open(path).read() if os.path.exists(path) else None
-    try:
-        m._record_replica_manifest("/root/testdata/sf0.001", [])
-        after = open(path).read() if os.path.exists(path) else None
-        assert after == before
-    finally:
-        if before is not None:
-            open(path, "w").write(before)
-        elif os.path.exists(path):
-            os.remove(path)
-
-
 def test_event_funnel_single_user_exchange(spark):
     """The funnel's window + per-user conditional-min aggregate must share
     ONE hashpartitioning(user_id) exchange (user_id is a subset of the
@@ -1938,8 +1713,9 @@ def test_probe_rows_upper_bound_is_sound_property(tmp_path):
     @given(st.sets(st.integers(min_value=0, max_value=10_000),
                    min_size=1, max_size=300),
            st.integers(min_value=1, max_value=120),
-           st.integers(min_value=50, max_value=200))
-    def check(ids, k, rg_size):
+           st.integers(min_value=50, max_value=200),
+           st.integers(min_value=1, max_value=119))
+    def check(ids, k, rg_size, r):
         d = tmp_path / f"p{abs(hash((tuple(sorted(ids))[:5], k, rg_size)))}"
         d.mkdir(exist_ok=True)
         f = d / "tbl.parquet"
@@ -1949,8 +1725,63 @@ def test_probe_rows_upper_bound_is_sound_property(tmp_path):
         true = sum(1 for i in ids if i % k == 0)
         assert b is not None and b >= true
         assert b <= len(ids)
+        # nonzero remainder (the IVF / k-means centroid rule id % 50 == 7)
+        r %= k
+        br = _probe_rows_upper_bound(str(d), "tbl", "doc_id", k, r)
+        assert br is not None and br >= sum(1 for i in ids if i % k == r)
+        assert br <= len(ids)
 
     check()
+
+
+def _write_embeddings(d, ids, dim=16):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    emb = [[float((7 * i + 3 * j) % 13) - 6.0 for j in range(dim)]
+           for i in ids]
+    d.mkdir(exist_ok=True)
+    pq.write_table(
+        pa.table({"vec_id": pa.array(ids, type=pa.int64()),
+                  "embedding": pa.array(emb, type=pa.list_(pa.float32()))}),
+        str(d / "embeddings.parquet"))
+    return str(d)
+
+
+def test_broadcast_scorers_on_empty_probe_side(spark, tmp_path):
+    """No probe (vec_id % 100 == 0) and no centroid (vec_id % 50 == 7)
+    rows, while the planning bounds (ids 1..199 could hold 1 probe and
+    4 centroids) still pick the broadcast regime: each numpy-scorer
+    caller collects an EMPTY side and must return the oracle's empty
+    result instead of crashing on a shape-(0,) matrix."""
+    sf = _write_embeddings(tmp_path / "noprobe", [
+        i for i in range(1, 200) if i % 100 != 0 and i % 50 != 7])
+    con = duck_views(sf)
+    for name in ("dedup_embedding_cosine", "sim_topk_bruteforce",
+                 "sim_ivf_topk", "sim_kmeans_update", "sim_quantized_topk"):
+        n_rows, problems = compare(spark, con, name, sf)
+        assert not problems and n_rows == 0, (name, problems)
+
+
+def test_sparse_centroid_ids_route_to_max_by(spark, tmp_path, monkeypatch):
+    """Every id = 7 (mod 50), so EVERY row is an IVF / k-means centroid:
+    the dense estimate n // 50 + 1 says 2, the stats bound says all 60.
+    Over a (lowered) broadcast crossover both queries must plan the
+    max_by aggregate, never the driver-side centroid collect, and still
+    match their oracles."""
+    import htmpark.queries as Q
+
+    sf = _write_embeddings(tmp_path / "sparse",
+                           [50 * i + 7 for i in range(60)])
+    monkeypatch.setattr(Q, "_MAX_BROADCAST_PROBES", 10)
+    for fn in (Q.q_sim_ivf_topk, Q.q_sim_kmeans_update):
+        plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan, fn.__name__
+        assert "max_by" in plan, fn.__name__
+    con = duck_views(sf)
+    for name in ("sim_ivf_topk", "sim_kmeans_update"):
+        _, problems = compare(spark, con, name, sf)
+        assert not problems, (name, problems)
 
 
 def test_idn_spellings_alias_one_surt_key(spark):
@@ -2179,8 +2010,7 @@ def test_winnowing_guarantee(spark, tmp_path):
 
 # ---------------------------------------------------------------------------
 # round-10 closures: single-scan IDN, bounded schedule + carryover,
-# strict robots tokens, typed probe stats, one-pass signal frame,
-# transitive fingerprints
+# strict robots tokens, typed probe stats, one-pass signal frame
 
 
 def test_idn_prestage_is_single_scan(spark):
@@ -2417,77 +2247,6 @@ def test_doc_signals_one_pass_and_values(spark, tmp_path):
     assert sig2 == {d: tuple(r) for d, r in sig.items()}
 
 
-def test_fingerprints_fold_transitive_helpers():
-    """Registry fingerprints must cover shared helpers (r9 ADVICE): a
-    query's hash folds in the source of every htmpark function and the
-    repr of every module constant it transitively references, so a
-    helper edit can no longer leave dependent fingerprints unchanged.
-    Spot-pin the dependency closure of two helper-heavy queries."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "check_registry_order",
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "tools",
-            "check_registry_order.py"))
-    cro = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cro)
-
-    import inspect
-
-    import htmpark.queries as Q
-
-    skip = frozenset({"htmpark.queries"})
-    frags = "\n".join(cro._dep_fragments(
-        Q.q_web_crawl_schedule, {id(Q.q_web_crawl_schedule)}, skip))
-    # direct helper, transitive helper, and a planning constant
-    assert inspect.getsource(Q._seeded_bfs_dist) in frags
-    assert inspect.getsource(Q._bfs_waves) in frags      # via _seeded_bfs_dist
-    assert f"<const _SCHED_HORIZON_CAP>{Q._SCHED_HORIZON_CAP!r}" in frags
-
-    frags2 = "\n".join(cro._dep_fragments(
-        Q.q_curation_pipeline, {id(Q.q_curation_pipeline)}, skip))
-    from htmpark import job as J
-    assert inspect.getsource(J._doc_signals_build) in frags2  # via job import
-    # and the fingerprint actually changes when a dependency would:
-    # hashing with vs without the SQL side must differ (sanity on the
-    # fold itself)
-    fn = Q.q_web_crawl_schedule
-    assert cro.fingerprint(fn, None) != \
-        cro.fingerprint(fn, Q.SQL_WEB_CRAWL_SCHEDULE)
-
-    # the closure must not stop one module-fold hop in (r10 review):
-    # sitemap.py's own `from . import sax` has to reach parser.py, so
-    # a parser edit flips web_sitemap_coverage's fingerprint
-    import htmpark.parser as P
-    import htmpark.sitemap as S
-    frags3 = "\n".join(cro._dep_fragments(
-        Q.q_web_sitemap_coverage, {id(Q.q_web_sitemap_coverage)}, skip))
-    assert inspect.getsource(S) in frags3
-    assert inspect.getsource(P) in frags3
-
-    # determinism across session-cache state (r10 review): a filled
-    # query cache must hash identically to an empty one — the replica
-    # manifest is recorded in-process AFTER the gate fills the caches,
-    # and the order checker verifies from a fresh process
-    names = ["curation_pipeline", "dedup_minhash_pairs",
-             "web_crawl_schedule", "web_sitemap_coverage"]
-    before = {n: cro.fingerprint(*Q.REGISTRY[n]) for n in names}
-    Q._PAIRS_CACHE[("fp-test",)] = object()
-    Q._DOC_SIGNALS_CACHE[("fp-test",)] = object()
-    try:
-        after = {n: cro.fingerprint(*Q.REGISTRY[n]) for n in names}
-    finally:
-        Q._PAIRS_CACHE.pop(("fp-test",), None)
-        Q._DOC_SIGNALS_CACHE.pop(("fp-test",), None)
-    assert before == after
-
-    # the query module itself is never folded as text: otherwise every
-    # query's fingerprint would couple to every other query's source
-    assert inspect.getsource(Q) not in frags2
-
-
 def test_schedule_cycles_drain_exactly(spark):
     """Carryover CONSUMPTION (r10 verdict item 3): next_schedule_cycle
     seeds planning cycle k+1 from cycle k's output rows alone, and the
@@ -2544,6 +2303,26 @@ def test_schedule_cycles_drain_exactly(spark):
     for bad in (0, 1.5, Q._SCHED_HORIZON_CAP + 1):
         with pytest.raises(ValueError, match="horizon"):
             Q.next_schedule_cycle(c1, horizon=bad)
+
+
+def test_schedule_cycle2_persists_cycle1_once(spark):
+    """Repeated cycle2 calls in one session share ONE persisted cycle-1
+    table, memoized per (session, sf_dir), instead of persisting and
+    tracking a fresh one per call; teardown frees it."""
+    import htmpark.queries as Q
+
+    Q.clear_candidate_pairs_cache()
+    first = sorted(map(tuple, Q.q_web_crawl_schedule_cycle2(
+        spark, SF).collect()))
+    second = sorted(map(tuple, Q.q_web_crawl_schedule_cycle2(
+        spark, SF).collect()))
+    assert first == second and first
+    assert not Q._BASELINE_NODES
+    (c1,) = Q._SCHED_CYCLE1_CACHE.values()
+    assert c1.storageLevel.useMemory
+    Q.clear_candidate_pairs_cache()
+    assert not Q._SCHED_CYCLE1_CACHE
+    assert not c1.storageLevel.useMemory
 
 
 def test_text_gates_signal_injection(spark, tmp_path):

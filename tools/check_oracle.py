@@ -1,10 +1,13 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's correctness gate.
+"""Spark-vs-DuckDB oracle gate for the query registry.
 
 Runs each queries() entry on Spark AND its oracle_sql() on DuckDB over the
 same parquet tables, comparing row count + column names + an
 order-insensitive value hash (columns sorted by name, rows sorted, values
-stringified).  Usage:
+stringified).  ``compare`` and ``duck_views`` are the one implementation
+of that check: tests/test_queries.py runs it for every registry entry at
+sf0.001 and sf0.01, and tests/test_differential_random.py on a seeded
+random table set.  Usage:
 
     python tools/check_oracle.py [query ...] [--sf /root/testdata/sf0.01]
 """
@@ -64,122 +67,84 @@ def frame_hash(cols, rows):
     return h.hexdigest()
 
 
+def duck_views(sf_dir):
+    """DuckDB connection with one view per input table present in
+    ``sf_dir`` — the oracle side of every Spark-vs-DuckDB comparison."""
+    import duckdb
+
+    con = duckdb.connect()
+    for tbl in TABLES:
+        path = f"{sf_dir}/{tbl}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def _arrow_rows(tab):
+    cols = tab.column_names
+    return cols, [tuple(d[c] for c in cols) for d in tab.to_pylist()]
+
+
+def compare(spark, con, name, sf_dir):
+    """Run REGISTRY[name] on Spark and its oracle on DuckDB (``con``, see
+    duck_views) over the tables in ``sf_dir``.
+
+    Returns ``(n_rows, problems)``; ``problems`` is empty when both sides
+    agree on column names, row count and frame_hash, and the Spark output
+    has only scalar columns (a list/map/struct cell is unhashable in the
+    driver's canonicalizing sort).  Both sides are fetched through Arrow:
+    the hash is type-sensitive and fetchall() collapses DuckDB HUGEINT to
+    int, masking exactly the mismatch the hash exists to catch.  Engine
+    errors propagate."""
+    import pyarrow as pa
+
+    from htmpark.queries import REGISTRY, resolve_sql
+
+    fn, sql = REGISTRY[name]
+    stab = fn(spark, sf_dir).toArrow()
+    problems = [f"non-scalar column {f.name}: {f.type}"
+                for f in stab.schema if pa.types.is_nested(f.type)]
+    scols, srows = _arrow_rows(stab)
+    dcols, drows = _arrow_rows(con.execute(resolve_sql(sql, sf_dir)).arrow())
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"schema {scols} vs {dcols}")
+    elif len(srows) != len(drows):
+        problems.append(f"rows {len(srows)} vs {len(drows)}")
+    elif frame_hash(scols, srows) != frame_hash(dcols, drows):
+        sset = {tuple(norm_cell(v) for v in r) for r in srows}
+        dset = {tuple(norm_cell(v) for v in r) for r in drows}
+        problems.append(f"value-hash mismatch: spark-only="
+                        f"{list(sset - dset)[:2]} duck-only="
+                        f"{list(dset - sset)[:2]}")
+    return len(srows), problems
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
-    import duckdb
-
     from htmpark.job import build_session
-    from htmpark.queries import REGISTRY, resolve_sql
+    from htmpark.queries import REGISTRY
 
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{args.sf}/{tbl}.parquet')"
-        )
-
+    con = duck_views(args.sf)
     spark = build_session("local[8]", shuffle_partitions=8, app_name="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
-    names = args.queries or list(REGISTRY)
     failures = 0
-    for name in names:
-        fn, sql = REGISTRY[name]
-        sql = resolve_sql(sql, args.sf)
+    for name in args.queries or list(REGISTRY):
         try:
-            sdf = fn(spark, args.sf)
-            stab = sdf.toArrow()
-            scols = stab.column_names
-            srows = [tuple(d[c] for c in scols) for d in stab.to_pylist()]
+            n_rows, problems = compare(spark, con, name, args.sf)
         except Exception as e:
-            print(f"FAIL  {name:32s} spark error: {e}")
-            failures += 1
-            continue
-        if sql is None:
-            print(f"OK?   {name:32s} rows={len(srows)} (no oracle: rows-only)")
-            continue
-        try:
-            dtab = con.execute(sql).arrow()
-            dcols = dtab.column_names
-            drows = [tuple(d[c] for c in dcols) for d in dtab.to_pylist()]
-        except Exception as e:
-            print(f"FAIL  {name:32s} duckdb error: {e}")
-            failures += 1
-            continue
-        problems = []
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"schema {scols} vs {dcols}")
-        if len(srows) != len(drows):
-            problems.append(f"rows {len(srows)} vs {len(drows)}")
-        if not problems:
-            sh, dh = frame_hash(scols, srows), frame_hash(dcols, drows)
-            if sh != dh:
-                problems.append("value-hash mismatch")
-                # show a diff sample
-                sset = {tuple(norm_cell(v) for v in r) for r in srows}
-                dset = {tuple(norm_cell(v) for v in r) for r in drows}
-                only_s = list(sset - dset)[:2]
-                only_d = list(dset - sset)[:2]
-                problems.append(f"spark-only={only_s} duck-only={only_d}")
+            n_rows, problems = None, [f"error: {e}"]
         if problems:
             print(f"FAIL  {name:32s} " + "; ".join(problems))
             failures += 1
         else:
-            print(f"OK    {name:32s} rows={len(srows)}")
+            print(f"OK    {name:32s} rows={n_rows}")
     spark.stop()
-    if not args.queries and not failures:
-        _record_replica_manifest(args.sf, names)
     sys.exit(1 if failures else 0)
-
-
-def _record_replica_manifest(sf, names):
-    """Record a full-registry green replica run for the order checker.
-
-    tools/check_registry_order.py requires every tail (>WINDOW) entry to be
-    green in the LATEST driver CORRECTNESS file; right after the driver
-    drops a new file, the rotated-out tail is structurally stale and the
-    checker goes red until the next rotation (this exact red opened rounds
-    7 and 8).  The manifest closes that window: a full replica run on this
-    tree is equally fresh evidence, so the checker accepts "green in latest
-    driver file OR green in a replica manifest that (a) post-dates the
-    latest driver file and (b) fingerprint-matches the current source".
-
-    Only gate-scale-or-above runs are recorded (r8 ADVICE): a green run at
-    the default sub-gate sf0.001 must not OVERWRITE a valid sf0.01
-    manifest with one the order checker rejects (replica_scale_ok) —
-    that fails safe but silently destroys evidence.
-    """
-    import json
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from check_registry_order import (  # noqa: E402 (same dir)
-        REPLICA_MIN_SF, fingerprint, latest_correctness, replica_scale_ok)
-
-    from htmpark.queries import REGISTRY
-
-    if not replica_scale_ok(args_sf_base(sf)):
-        print(f"replica manifest NOT recorded: sf {args_sf_base(sf)!r} is "
-              f"below the driver gate scale (needs sf >= "
-              f"{REPLICA_MIN_SF}); existing manifest left untouched")
-        return
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    manifest = {
-        "sf": args_sf_base(sf),
-        "latest_driver": latest_correctness(repo_root),
-        "queries": {name: fingerprint(*REGISTRY[name]) for name in names},
-    }
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "replica_manifest.json")
-    json.dump(manifest, open(path, "w"), indent=1, sort_keys=True)
-    print(f"replica manifest recorded ({len(names)} green) -> {path}")
-
-
-def args_sf_base(sf):
-    return os.path.basename(os.path.normpath(sf))
 
 
 if __name__ == "__main__":
